@@ -134,10 +134,16 @@ def lm_kneser_ney_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     split a doc's rows across spill buffers and re-associate the double
     additions — a last-ulp flip could reorder the top-25 rank.
     tests/test_r15_sum_order_fallback.py plants that fallback
-    (spark.sql.TungstenAggregate.testFallbackStartsAt=1,1 — every
-    aggregate sort-based, maximal buffer splitting) and asserts byte-
+    (spark.sql.TungstenAggregate.testFallbackStartsAt=8,8 — the hash
+    map spills to a sorter every 8 input rows) and asserts byte-
     identical output; if Spark's fallback ever breaks the identity, that
-    test trips and the fix is the pre-r14 position-ordered fold."""
+    test trips and the fix is the pre-r14 position-ordered fold. 8 is
+    derived, not tuned: sf0.001 docs carry 9–98 bigrams (median 55), so
+    at 8 every doc's rows still cross a spill boundary. 1,1 cannot run:
+    each row becomes its own spill file and the merge opens them all at
+    once, two 1 MiB read buffers each — the one-row-group sf0.001
+    corpus puts all 27,439 bigram rows in one task, tens of GB of
+    readers, past any heap the session factory gives."""
     from pyspark import StorageLevel
 
     docs = table(spark, sf_dir, "documents")

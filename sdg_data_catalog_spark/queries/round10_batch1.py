@@ -199,13 +199,14 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
       but min/max partial-aggregate to one row per (shingle, partition)
       where count-distinct expands to a (shingle, doc_id)-grain exchange
       (occurrence-sized for mostly-unique shingles).
-    - per-doc n_shingles is size(t) − 7 straight off the token array
-      (the explode emits exactly that many rows per doc by construction)
-      and the occurrence join shrinks to a LEFT SEMI against only the
-      DUPLICATED shingles, so the doc-grain rollup aggregates dup
-      occurrences only, not the whole corpus stream; zero-dup docs
-      come back via COALESCE over the doc-grain left join — exactly the
-      oracle's tot LEFT JOIN hits shape."""
+    - both per-doc counts come from ONE doc-grain aggregate over
+      shingles LEFT JOIN dup(shingle, hit), where dup holds only the
+      DUPLICATED shingles: n_shingles is count(1) over every occurrence
+      and n_dup_shingles is count(hit), which counts only the matched
+      rows. Every doc with ≥ 8 words has ≥ 1 shingle, so no doc is lost
+      and no COALESCE is needed. Taking n_shingles as size(t) − 7 in a
+      separate branch instead re-expands the token relation: 3
+      documents scans where this shape plans 2."""
     docs = table(spark, sf_dir, "documents")
     w = F.split("text", " ")
     t = F.col("t")
@@ -218,30 +219,23 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         ),
     )
-    base = docs.filter(F.size(w) >= _SHINGLE).select("doc_id", w.alias("t"))
-    shingles = base.select("doc_id", F.explode(sh).alias("shingle"))
+    shingles = (
+        docs.filter(F.size(w) >= _SHINGLE)
+        .select("doc_id", w.alias("t"))
+        .select("doc_id", F.explode(sh).alias("shingle"))
+    )
     dup = (
         shingles.groupBy("shingle")
         .agg((F.min("doc_id") != F.max("doc_id")).alias("multi"))
         .filter(F.col("multi"))
-        .select("shingle")
-    )
-    hits = (
-        shingles.join(dup, "shingle", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_dup"))
-    )
-    tot = base.select(
-        "doc_id", (F.size(t) - (_SHINGLE - 1)).cast("bigint").alias("n_shingles")
+        .select("shingle", F.lit(1).alias("hit"))
     )
     return (
-        tot.join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_shingles",
-            F.coalesce(F.col("n_dup"), F.lit(0)).cast("bigint").alias(
-                "n_dup_shingles"
-            ),
+        shingles.join(dup, "shingle", "left")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_shingles"),
+            F.count("hit").alias("n_dup_shingles"),
         )
         .orderBy("doc_id")
     )

@@ -108,11 +108,15 @@ def curation_ppl_band_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     F.sum("logp") relies on hash-aggregate stream order matching the
     oracle's pos-ordered fold; a sort-based fallback under memory
     pressure can re-associate the additions, and avg_logp feeds the
-    floor(·1e9) band-membership key. The fallback is planted and the
-    output pinned byte-identical in
-    tests/test_r15_sum_order_fallback.py (see lm_kneser_ney_score's
-    docstring for the mechanism); the report column itself is already
-    order-free (micro-unit integer sum)."""
+    floor(·1e9) band-membership key. The fallback is planted at
+    testFallbackStartsAt=8,8 and the output pinned byte-identical in
+    tests/test_r15_sum_order_fallback.py: sf0.001 docs carry 9–98
+    bigrams, so at 8 every doc's sum merges partial buffers, while 1,1
+    (one spill file per row, all opened at once by the merge, two
+    1 MiB read buffers each) exhausts any heap the session factory
+    gives (see lm_kneser_ney_score's docstring for the mechanism); the
+    report column itself is already order-free (micro-unit integer
+    sum)."""
     from sdg_data_catalog_spark.operators.curation import running_total
 
     docs = table(spark, sf_dir, "documents")

@@ -22,9 +22,9 @@ _formatted_plan = P.formatted_plan
 
 
 @pytest.fixture(scope="module")
-def plans(spark, sf_dir):
+def plans(module_spark, sf_dir):
     qs = all_queries()
-    return {name: _formatted_plan(qs[name](spark, sf_dir)) for name in (
+    return {name: _formatted_plan(qs[name](module_spark, sf_dir)) for name in (
         "q5_adhoc",
         "q1_pricing_summary",
         "join_fk",
@@ -91,9 +91,9 @@ def test_codegen_present(spark, sf_dir):
 
 
 @pytest.fixture(scope="module")
-def tpch_plans(spark, sf_dir):
+def tpch_plans(module_spark, sf_dir):
     qs = all_queries()
-    return {name: _formatted_plan(qs[name](spark, sf_dir)) for name in (
+    return {name: _formatted_plan(qs[name](module_spark, sf_dir)) for name in (
         "q4_priority_exists",
         "q19_disjunctive_join",
         "q22_idle_customers",
@@ -311,9 +311,9 @@ def test_partitioned_scan_prunes_directories(spark, sf_dir):
 
 
 @pytest.fixture(scope="module")
-def tpch_rest_plans(spark, sf_dir):
+def tpch_rest_plans(module_spark, sf_dir):
     qs = all_queries()
-    return {name: _formatted_plan(qs[name](spark, sf_dir)) for name in (
+    return {name: _formatted_plan(qs[name](module_spark, sf_dir)) for name in (
         "q2_min_acctbal_supplier",
         "q16_supplier_relation",
         "q21_waiting_supplier",

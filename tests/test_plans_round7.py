@@ -14,10 +14,10 @@ from sdg_data_catalog_spark.queries.registry import all_queries
 
 
 @pytest.fixture(scope="module")
-def r7_plans(spark, sf_dir):
+def r7_plans(module_spark, sf_dir):
     qs = all_queries()
     return {
-        name: P.formatted_plan(qs[name](spark, sf_dir))
+        name: P.formatted_plan(qs[name](module_spark, sf_dir))
         for name in (
             "text_gopher_rules",
             "curation_domain_mix",

@@ -13,12 +13,22 @@ move a doc across the floor(avg_logp·1e9) band key or the top-25 rank.
 
 This test plants that fallback deliberately via Spark's internal testing
 conf `spark.sql.TungstenAggregate.testFallbackStartsAt` ("n1,n2" =
-switch partial/final aggregation to sort-based after that many keys):
-with "1,1" every aggregate runs essentially sort-based with maximal
-buffer splitting. Both ops must produce byte-identical results to their
-no-fallback runs on the sf0.001 corpus. If Spark ever changes fallback
-semantics in a way that re-orders these sums past the rounding guards,
-this test is the tripwire — the fix then is the pre-r14 ordered fold.
+spill the aggregation hash map to a sorter every n1/n2 input rows, so
+the aggregate runs sort-based over many partial buffers). The threshold
+is "8,8": over the sf0.001 corpus (the lm_* tokenization, `_TOKS_SQL`)
+the per-doc bigram counts are min 9, median 55, max 98, so 8 is the
+largest threshold at which EVERY document's rows still cross a spill
+boundary and every per-doc F.sum merges partial buffers out of stream
+order. "1,1" (single-row segments) cannot run: every input row becomes
+its own spill file, the sort merge opens all of them at once, and each
+reader holds two 1 MiB heap buffers (spark.unsafe.sorter.spill.reader.
+buffer.size) — documents.parquet is one row group at sf0.001, so one
+task carries all 27,439 bigram rows, tens of GB of readers, past any
+heap the session factory gives (32g cap). Both ops must produce
+byte-identical results to their no-fallback runs on the sf0.001 corpus.
+If Spark ever changes fallback semantics in a way that re-orders these
+sums past the rounding guards, this test is the tripwire — the fix then
+is the pre-r14 ordered fold.
 """
 
 from __future__ import annotations
@@ -32,7 +42,7 @@ def _rows(df):
 
 def _run_with_fallback(spark, fn, sf_dir):
     baseline = _rows(fn(spark, sf_dir))
-    spark.conf.set(_FALLBACK_CONF, "1,1")
+    spark.conf.set(_FALLBACK_CONF, "8,8")
     try:
         fallback = _rows(fn(spark, sf_dir))
     finally:
